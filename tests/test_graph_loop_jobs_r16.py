@@ -183,3 +183,110 @@ def test_hits_actions(spark, chain_edges, monkeypatch):
     # algorithm; it cannot fold).  r15 ran 9 (plus the eager seed
     # checkpoint and two trailing finalization counts).
     assert c.n == 6, f"hits issued {c.n} actions; seed/finalization actions are back"
+
+
+# ---------------------------------------------------------------------------
+# The six other checkpoint-chain loops.  Counts recorded before those loops
+# moved onto operators/loop.py; the move keeps every one of them.
+
+
+@pytest.fixture(scope="module")
+def chain_pairs(spark):
+    # An 8-doc chain (pointer jumping needs several rounds) + an isolated pair.
+    rows = [(i, i + 1) for i in range(1, 8)] + [(10, 11)]
+    return spark.createDataFrame(rows, "doc_a long, doc_b long")
+
+
+@pytest.fixture(scope="module")
+def vectors(spark):
+    rows = [(i, [float((i * 7 + j * 3) % 11) / 10.0 for j in range(4)]) for i in range(1, 13)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    rows = [("low lower lowest",), ("newer newest new",), ("wider widest low",)]
+    return spark.createDataFrame(rows, "text string")
+
+
+def test_connected_components_actions(spark, chain_pairs, monkeypatch):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.dedup import (
+        connected_components,
+    )
+
+    c = _ActionCounter(monkeypatch)
+    connected_components(chain_pairs).collect()
+    _released(spark)
+    # 5 = one convergence agg per round (4 rounds: the third changes the
+    # last label, the fourth confirms the fixpoint) + the caller's collect.
+    assert c.n == 5, f"connected_components issued {c.n} actions"
+
+
+def test_hierarchy_actions(spark, monkeypatch):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
+        hierarchy_flatten,
+    )
+
+    nodes = spark.createDataFrame(
+        [(i, i // 2 if i > 1 else None) for i in range(1, 16)], "node long, parent long"
+    )
+    c = _ActionCounter(monkeypatch)
+    hierarchy_flatten(nodes).collect()
+    _released(spark)
+    # 6 = the eager seed checkpoint + one moved-count per doubling round
+    # (3 rounds on a depth-3 tree) + the cycle count + the caller's collect.
+    assert c.n == 6, f"hierarchy_flatten issued {c.n} actions"
+
+
+def test_kcenter_greedy_actions(spark, vectors, monkeypatch):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.clustering import (
+        kcenter_greedy_fixedpoint,
+    )
+
+    c = _ActionCounter(monkeypatch)
+    kcenter_greedy_fixedpoint(vectors, k=4, dim=4, scale=100)
+    _released(spark)
+    # 4 = the seed-row collect + one farthest-point collect per added
+    # center (k - 1 = 3).
+    assert c.n == 4, f"kcenter_greedy_fixedpoint issued {c.n} actions"
+
+
+def test_kcenter_batched_actions(spark, vectors, monkeypatch):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.clustering import (
+        kcenter_batched_fixedpoint,
+    )
+
+    c = _ActionCounter(monkeypatch)
+    kcenter_batched_fixedpoint(vectors, k=5, dim=4, scale=100, batch=2)
+    _released(spark)
+    # 4 = the seed-row collect + one candidate collect per pass (3 passes
+    # certify the 4 further centers 2 at a time or fewer).
+    assert c.n == 4, f"kcenter_batched_fixedpoint issued {c.n} actions"
+
+
+def test_power_iteration_actions(spark, vectors, monkeypatch):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.similarity import (
+        gram_fixedpoint,
+        power_iteration_topvec,
+    )
+
+    cells = gram_fixedpoint(vectors, scale=100, dim=4)
+    c = _ActionCounter(monkeypatch)
+    power_iteration_topvec(cells, iterations=3).collect()
+    _released(spark)
+    # 4 = one eager checkpoint per iteration + the caller's collect.
+    assert c.n == 4, f"power_iteration_topvec issued {c.n} actions"
+
+
+@pytest.mark.parametrize("return_symbols", [False, True])
+def test_bpe_learned_merges_actions(spark, corpus, monkeypatch, return_symbols):
+    from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.trainprep import (
+        bpe_learn_merges,
+    )
+
+    c = _ActionCounter(monkeypatch)
+    bpe_learn_merges(corpus, "text", rounds=3, return_symbols=return_symbols)
+    _released(spark)
+    # 4 = one top-pair collect per round + the count that materializes the
+    # final symbol table before its parents are released (both modes).
+    assert c.n == 4, f"bpe_learn_merges issued {c.n} actions"
