@@ -247,37 +247,32 @@ def kcenter_greedy_fixedpoint(
     base, first = _kcenter_base(
         df, id_col, vec_col, dim, scale, "kcenter_greedy_fixedpoint"
     )
-    from .dedup import _unpersist_checkpoint
+    from .loop import CheckpointChain
 
     selected = [(1, first["__id"], 0)]
     center_vec = list(first["__vf"])
     dist_to = _kcenter_dist_expr
 
-    # Lazy checkpoints (r13, CC precedent): each round's farthest-point
-    # collect is the only job and materializes the superseding frame.
-    md = base.select(
-        "__id", "__vf", dist_to(center_vec).alias("__md")
-    ).localCheckpoint(eager=False)
-    prev = None
-    for rank in range(2, k + 1):
-        far = (
-            md.orderBy(F.desc("__md"), F.asc("__id")).limit(1).collect()
-        )
-        row = far[0]
-        if int(row["__md"]) == 0:
-            break  # cover is exact; more centers would duplicate points
-        selected.append((rank, row["__id"], int(row["__md"])))
-        nxt = md.select(
-            "__id",
-            "__vf",
-            F.least(F.col("__md"), dist_to(list(row["__vf"]))).alias("__md"),
-        ).localCheckpoint(eager=False)
-        if prev is not None:
-            _unpersist_checkpoint(prev)
-        prev, md = md, nxt
-    if prev is not None:
-        _unpersist_checkpoint(prev)
-    _unpersist_checkpoint(md)
+    # Each round's farthest-point collect is its only job and
+    # materializes the round's lazily checkpointed frame (checkpoint
+    # chain: ``loop.py``; the selection lives on the driver, so nothing
+    # stays pinned).
+    with CheckpointChain() as chain:
+        md = chain.push(base.select("__id", "__vf", dist_to(center_vec).alias("__md")))
+        for rank in range(2, k + 1):
+            row = md.orderBy(F.desc("__md"), F.asc("__id")).limit(1).collect()[0]
+            chain.settle()
+            if int(row["__md"]) == 0:
+                break  # cover is exact; more centers would duplicate points
+            selected.append((rank, row["__id"], int(row["__md"])))
+            if rank < k:
+                md = chain.push(
+                    md.select(
+                        "__id",
+                        "__vf",
+                        F.least(F.col("__md"), dist_to(list(row["__vf"]))).alias("__md"),
+                    )
+                )
     spark = df.sparkSession
     return spark.createDataFrame(
         selected, "rank long, vec_id long, radius_fp long"
@@ -326,7 +321,7 @@ def kcenter_batched_fixedpoint(
     base, first = _kcenter_base(
         df, id_col, vec_col, dim, scale, "kcenter_batched_fixedpoint"
     )
-    from .dedup import _unpersist_checkpoint
+    from .loop import CheckpointChain
 
     selected = [(1, first["__id"], 0)]
     dist_term = _kcenter_dist_expr
@@ -334,58 +329,56 @@ def kcenter_batched_fixedpoint(
     def d2(a: list[int], b: list[int]) -> int:
         return sum((x - y) * (x - y) for x, y in zip(a, b))
 
-    # Lazy (r13): the per-batch candidate collect materializes md.
-    md = base.select(
-        "__id", "__vf", dist_term(list(first["__vf"])).alias("__md")
-    ).localCheckpoint(eager=False)
-    prev = None
-    exhausted = False
-    while len(selected) < k and not exhausted:
-        want = k - len(selected)
-        t = min(batch, want)
-        cand = (
-            md.orderBy(F.desc("__md"), F.asc("__id")).limit(t + 1).collect()
+    # The per-batch candidate collect materializes md (checkpoint chain:
+    # ``loop.py``; nothing stays pinned).
+    with CheckpointChain() as chain:
+        md = chain.push(
+            base.select("__id", "__vf", dist_term(list(first["__vf"])).alias("__md"))
         )
-        if not cand:
-            break
-        # bound on every outside point's (only-shrinking) updated distance
-        bound = int(cand[t]["__md"]) if len(cand) > t else -1
-        cur = [
-            {"id": r["__id"], "vf": list(r["__vf"]), "md": int(r["__md"])}
-            for r in cand[:t]
-        ]
-        accepted_vecs: list[list[int]] = []
-        for step in range(t):
-            if accepted_vecs:
-                # fold ONLY the center accepted on the previous step into
-                # the remaining candidates' true min-distances
-                for c in cur:
-                    c["md"] = min(c["md"], d2(c["vf"], accepted_vecs[-1]))
-            best = max(cur, key=lambda c: (c["md"], -c["id"]))
-            if step > 0 and best["md"] <= bound:
-                break  # an unseen outside point could beat (or tie) this
-            if best["md"] == 0:
-                exhausted = True  # cover exact -- stop the whole selection
+        exhausted = False
+        while len(selected) < k and not exhausted:
+            want = k - len(selected)
+            t = min(batch, want)
+            cand = (
+                md.orderBy(F.desc("__md"), F.asc("__id")).limit(t + 1).collect()
+            )
+            chain.settle()
+            if not cand:
                 break
-            selected.append((len(selected) + 1, best["id"], best["md"]))
-            accepted_vecs.append(best["vf"])
-            cur = [c for c in cur if c["id"] != best["id"]]
-            if not cur:
-                break
-        if accepted_vecs:
-            nxt = md.select(
-                "__id",
-                "__vf",
-                F.least(F.col("__md"), *[dist_term(v) for v in accepted_vecs]).alias(
-                    "__md"
-                ),
-            ).localCheckpoint(eager=False)
-            if prev is not None:
-                _unpersist_checkpoint(prev)
-            prev, md = md, nxt
-    if prev is not None:
-        _unpersist_checkpoint(prev)
-    _unpersist_checkpoint(md)
+            # bound on every outside point's (only-shrinking) updated distance
+            bound = int(cand[t]["__md"]) if len(cand) > t else -1
+            cur = [
+                {"id": r["__id"], "vf": list(r["__vf"]), "md": int(r["__md"])}
+                for r in cand[:t]
+            ]
+            accepted_vecs: list[list[int]] = []
+            for step in range(t):
+                if accepted_vecs:
+                    # fold ONLY the center accepted on the previous step into
+                    # the remaining candidates' true min-distances
+                    for c in cur:
+                        c["md"] = min(c["md"], d2(c["vf"], accepted_vecs[-1]))
+                best = max(cur, key=lambda c: (c["md"], -c["id"]))
+                if step > 0 and best["md"] <= bound:
+                    break  # an unseen outside point could beat (or tie) this
+                if best["md"] == 0:
+                    exhausted = True  # cover exact -- stop the whole selection
+                    break
+                selected.append((len(selected) + 1, best["id"], best["md"]))
+                accepted_vecs.append(best["vf"])
+                cur = [c for c in cur if c["id"] != best["id"]]
+                if not cur:
+                    break
+            if accepted_vecs and len(selected) < k and not exhausted:
+                md = chain.push(
+                    md.select(
+                        "__id",
+                        "__vf",
+                        F.least(
+                            F.col("__md"), *[dist_term(v) for v in accepted_vecs]
+                        ).alias("__md"),
+                    )
+                )
     spark = df.sparkSession
     return spark.createDataFrame(
         selected, "rank long, vec_id long, radius_fp long"

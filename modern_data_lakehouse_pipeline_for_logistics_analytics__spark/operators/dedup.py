@@ -25,6 +25,7 @@ repartition when the corpus arrives as few files.  Set algebra
 
 from __future__ import annotations
 
+import itertools
 import threading
 
 from pyspark.sql import DataFrame
@@ -799,9 +800,10 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3) ->
     return src.mapInPandas(gen, schema="doc long, simhash long")
 
 
-def connected_components(
-    pairs: DataFrame, max_iter: int = 20, broadcast_threshold: int = 0
-) -> DataFrame:
+_CC_CALLS = itertools.count(1)
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Collapse near-dup pairs into clusters: iterative min-label
     propagation until fixpoint.  Output: ``doc, canonical`` (canonical =
     min doc id in the component) for every doc appearing in a pair.
@@ -814,48 +816,27 @@ def connected_components(
     two primitives become the alternating large-star/small-star rounds.
 
     Fixpoint detection costs ONE action per round -- the SAME job that
-    materializes the round's labels: the round's frame is
-    ``localCheckpoint(eager=False)``-ed (marks the RDD for caching +
-    lineage truncation without launching a job), and the convergence
-    ``sum(changed)`` action both materializes that checkpoint and
-    returns the count.  Each round carries a ``changed`` flag (new
-    canonical != old canonical, computed inside the round's own
-    projection -- no old-vs-new join), and ``sum(changed)`` == 0 means
-    elementwise fixpoint.  (r13: previously each round ran TWO actions
-    -- an eager checkpoint job plus a separate convergence job -- which
-    doubled the fixed per-round scheduling cost; on small/medium
-    components the loop is scheduling-bound, so folding them halved the
-    measured round cost.)  Type-agnostic: works for string doc ids as
-    well as numeric (a ``sum(canonical)`` potential would CAST-fail on
-    strings under ANSI, or silently compare None==None with ANSI off
-    and exit unconverged).
+    materializes the round's lazily checkpointed labels.  Each round
+    carries a ``changed`` flag (new canonical != old canonical, computed
+    inside the round's own projection -- no old-vs-new join), and
+    ``sum(changed)`` == 0 means elementwise fixpoint.  (r13: previously
+    each round ran TWO actions -- an eager checkpoint job plus a
+    separate convergence job -- which doubled the fixed per-round
+    scheduling cost; on small/medium components the loop is
+    scheduling-bound, so folding them halved the measured round cost.)
+    Type-agnostic: works for string doc ids as well as numeric (a
+    ``sum(canonical)`` potential would CAST-fail on strings under ANSI,
+    or silently compare None==None with ANSI off and exit unconverged).
 
-    Each round's labels are ``localCheckpoint``-ed, which both pins the
-    data AND truncates the logical plan: the new frame references the
-    old one three times (propagate, left-join, jump), so an
-    uncheckpointed loop re-analyzes a 3^round-size plan -- measured
-    round-1 > 3x round-0 cost from Catalyst alone.  Each superseded
-    round's checkpoint RDD is unpersisted EXPLICITLY once its successor
-    is materialized (the ContextCleaner's weak-ref path never fires while
-    py4j holds the plan objects), so at most [edges + 2 label frames] are
-    pinned regardless of round count; edges are unpersisted on exit.
-
-    ``broadcast_threshold`` (cluster knob, default OFF): the label frame
-    is a checkpointed LogicalRDD leaf, so Catalyst sees no stats and
-    AQE's SMJ->BHJ rewrite can't fire (the join inputs aren't downstream
-    of a measured shuffle stage) -- every round runs shuffle joins even
-    when labels hold a few hundred rows.  Setting a positive threshold
-    makes setup pay ONE exact ``count()`` on the initial labels, and
-    when the doc count is provably under it, every label-side join input
-    is ``F.broadcast()``-hinted (the AQE decision made with a measured
-    cardinality instead of an estimate).  On a multi-executor cluster
-    that trades three network shuffles per round for one small-table
-    broadcast; in single-JVM ``local[N]`` the shuffles are already
-    memory-local and the per-round driver collect + broadcast build is
-    pure overhead (A/B at sf0.1: broadcast 3.19 s vs shuffle 2.84 s
-    median over 5 warm runs), hence the off-by-default.  Output is
-    byte-identical either way (pinned in tests/test_dedup_clusters.py).
+    The per-round checkpoint matters more here than in any other loop:
+    the new frame references the old one three times (propagate,
+    left-join, jump), so an uncheckpointed loop re-analyzes a
+    3^round-size plan -- measured round-1 > 3x round-0 cost from
+    Catalyst alone.  Checkpoint chain: ``loop.py``; the final labels
+    are pinned under a per-call ``dedup.connected_components#N`` key.
     """
+    from .loop import CheckpointChain, fixpoint
+
     # Both edge directions from ONE scan of `pairs` (explode, not a
     # two-branch union): the input is typically an uncached multi-stage
     # pipeline (LSH banding -> verify), and a union would execute it
@@ -878,29 +859,15 @@ def connected_components(
         .distinct()
         .cache()
     )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("canonical", F.col("doc"))
-        .localCheckpoint(eager=False)
-    )
-    # Cluster path only (see docstring): one exact count decides the
-    # per-round join strategy with a measured cardinality.  With the
-    # default threshold 0 no extra job runs and every round keeps the
-    # shuffle-join plan.
-    maybe_bcast = (
-        F.broadcast
-        if broadcast_threshold > 0 and labels.count() <= broadcast_threshold
-        else (lambda df: df)
-    )
-    for _ in range(max_iter):
+
+    def _propagate(labels: DataFrame) -> DataFrame:
         neighbor_min = (
-            edges.join(maybe_bcast(labels), edges["dst"] == labels["doc"])
+            edges.join(labels, edges["dst"] == labels["doc"])
             .groupBy("src")
             .agg(F.min("canonical").alias("nbr_min"))
         )
         stepped = labels.join(
-            maybe_bcast(neighbor_min), labels["doc"] == neighbor_min["src"], "left"
+            neighbor_min, labels["doc"] == neighbor_min["src"], "left"
         ).select(
             "doc",
             F.col("canonical").alias("__old"),
@@ -918,25 +885,29 @@ def connected_components(
         new_canonical = F.least(
             F.col("canonical"), F.coalesce(F.col("j_can"), F.col("canonical"))
         )
-        new_labels = (
-            stepped.join(maybe_bcast(jump), stepped["canonical"] == jump["j_doc"], "left")
-            .select(
-                "doc",
-                new_canonical.alias("canonical"),
-                (new_canonical != F.col("__old")).cast("long").alias("__changed"),
-            )
-            # Lazy: marks the RDD persisted + cuts lineage, but launches
-            # no job -- the convergence agg below is the round's ONLY
-            # action, materializing the checkpoint as its side effect.
-            .localCheckpoint(eager=False)
+        return stepped.join(jump, stepped["canonical"] == jump["j_doc"], "left").select(
+            "doc",
+            new_canonical.alias("canonical"),
+            (new_canonical != F.col("__old")).cast("long").alias("__changed"),
         )
-        n_changed = new_labels.agg(F.sum("__changed")).first()[0]
-        _unpersist_checkpoint(labels)  # successor is materialized; safe
-        labels = new_labels
-        if not n_changed:
-            break
-    edges.unpersist()
-    return labels.drop("__changed")
+
+    def _unchanged(frame: DataFrame) -> bool:
+        return not frame.agg(F.sum("__changed")).first()[0]
+
+    # Per-call pin key: one query can hold several CC results at once (a
+    # cohort digest unions five), so a new call must not supersede an
+    # older, still-live result; release_caches() frees them all.
+    try:
+        with CheckpointChain(f"dedup.connected_components#{next(_CC_CALLS)}") as chain:
+            start = chain.push(
+                edges.select(F.col("src").alias("doc"))
+                .distinct()
+                .withColumn("canonical", F.col("doc"))
+            )
+            final = fixpoint(chain, start, _propagate, _unchanged, max_iter)
+    finally:
+        edges.unpersist()
+    return final.drop("__changed")
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
@@ -1192,6 +1163,14 @@ def prefix_filter_candidates(
     enough to hold them in a prefix.  Candidates then take the standard
     exact verify (``jaccard_verify_pairs``).
     """
+    return _prefix_filter(df, id_col, text_col, threshold, n)[0]
+
+
+def _prefix_filter(
+    df: DataFrame, id_col: str, text_col: str, threshold: float, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """``prefix_filter_candidates`` plus the cached ``(doc, s)`` shingle
+    frame it ranked, for a verify stage that reuses it."""
     sh = _cache_aged("prefix_sh", shingle_sets(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     freq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df_s"))
@@ -1231,7 +1210,7 @@ def prefix_filter_candidates(
         .select(F.col("p.doc").alias("doc_a"), F.col("f.doc").alias("doc_b"))
         .distinct()
     )
-    return cands
+    return cands, sh
 
 
 def jaccard_pairs_prefix(
@@ -1241,10 +1220,8 @@ def jaccard_pairs_prefix(
     prefix-filtered candidate set: same answer, provably -- the filter is
     lossless -- with the candidate join keyed on rare shingles instead of
     every shared shingle."""
-    cands = prefix_filter_candidates(df, id_col, text_col, threshold, n)
-    return jaccard_verify_pairs(
-        df, cands, id_col, text_col, threshold, n, shingles=_sig_caches.get("prefix_sh")
-    )
+    cands, sh = _prefix_filter(df, id_col, text_col, threshold, n)
+    return jaccard_verify_pairs(df, cands, id_col, text_col, threshold, shingles=sh)
 
 
 def containment_pairs(

@@ -19,9 +19,8 @@ multiply needs 85x that, so callers keep ``n * SCALE * 85 < 2^63``
 
 Scale posture: each iteration is one join (ranks are (node, long) pairs
 -- 16-byte shuffle rows, the edge table partitioning is reusable across
-iterations) plus one map-side-combinable sum.  ``localCheckpoint`` per
-round caps logical-plan growth exactly like the connected-components
-loop (``dedup.py``); superseded checkpoint RDDs are unpersisted eagerly.
+iterations) plus one map-side-combinable sum.  Every loop here runs on
+the checkpoint chain of ``loop.py``.
 
 Reference parity: none -- the reference has no graph surface; this
 extends the iterative-algorithm family (SURVEY §7 north star).
@@ -32,17 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _unpersist_checkpoint, hold_pinned
+from .loop import CheckpointChain, fixpoint
 
 SCALE = 1_000_000_000_000  # 1.0 of rank, in fixed-point units
 DAMP_NUM, DAMP_DEN = 85, 100
-
-# Final-iteration localCheckpoint frames must stay pinned while the
-# returned result is live (the checkpoint IS its lineage); each operator
-# holds its final under its own key in dedup._pinned_finals -- a new run
-# supersedes only its OWN previous final (a shared slot let
-# hierarchy_flatten kill a still-live pagerank result), and
-# dedup.release_caches() drops them all.
 
 
 def pagerank_fixedpoint(
@@ -86,104 +78,93 @@ def pagerank_fixedpoint(
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         .persist()
     )
-    # Enforce the documented precondition LOUDLY: a dst-only (dangling)
-    # node has no degree row, so its rank semantics are undefined -- the
-    # two historical behaviors (excluded vs teleport-only row) differed
-    # silently depending on implementation details.  The probe rides the
-    # SAME job as the sizing stats (r16: one bounded 1-row action instead
-    # of two -- the loop is scheduling-bound at bench scale, guide §1.2).
-    # Size the edge partitioning to the data, not the session default:
-    # every iteration re-reads e, so 32 near-empty partitions x 5 rounds
-    # is pure scheduler overhead at bench scale, while a huge graph still
-    # fans out (~500k edge rows per partition, capped at 4x parallelism).
-    # One tiny agg over the degree table yields the node count (join
-    # strategy), the edge count (Σ deg = partition sizing) AND the
-    # dangling-destination count (precondition).
-    dangling_cnt = (
-        ed.select(F.col("to").alias("node"))
-        .distinct()
-        .join(deg.select("node"), "node", "left_anti")
-        .agg(F.count(F.lit(1)).alias("dg"))
-    )
-    stats = (
-        deg.agg(F.count(F.lit(1)).alias("n"), F.sum("deg").alias("ec"))
-        .crossJoin(dangling_cnt)
-        .first()
-    )
-    if stats["dg"]:
-        ed.unpersist()
-        deg.unpersist()
-        raise ValueError(
-            "pagerank_fixedpoint: edge list has dangling destination nodes "
-            "(no outgoing edges); symmetrize the graph or add self-loops first"
-        )
-    n_nodes, e_cnt = stats["n"], stats["ec"] or 0
-    sc_default = edges.sparkSession.sparkContext.defaultParallelism
-    e_parts = int(max(4, min(sc_default * 4, e_cnt // 500_000 + 1)))
-    e = (
-        ed.join(deg, "node")
-        .repartition(e_parts, "node")
-        .persist()
-    )
-    ranks = deg.select("node", F.lit(SCALE).cast("long").alias("r"))
-    teleport = (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN
-    maybe_bcast = F.broadcast if n_nodes <= broadcast_rank_rows else (lambda df: df)
-    # Zero-contribution self rows keep EVERY node in the rank table each
-    # round (in-degree-0 nodes hold the bare teleport rank yet still
-    # push mass out); folding them into the aggregate input costs one
-    # map-side-combined union row per node -- an extra LEFT JOIN against
-    # the node set measured ~2x the whole query.  Lazy checkpoint: the
-    # first round's materialization computes it once, every later round
-    # reads the persisted RDD; the final ranks checkpoint cuts lineage,
-    # so this releases on exit.
-    zero_rows = deg.select("node", F.lit(0).cast("long").alias("c")).localCheckpoint(
-        eager=False
-    )
-    # CHECKPOINT CADENCE (r16, guide §1.2 "the distributed algorithm"):
-    # each rank frame has exactly ONE downstream consumer (the next
-    # round's join), so nothing forces a materialization per round --
-    # the per-round eager checkpoint existed only to cap plan growth,
-    # and rank lineage grows LINEARLY (one join+agg per round), not
-    # exponentially like the 3-reference CC loop.  Rounds therefore
-    # chain lazily and materialize in ONE job per ``checkpoint_every``
-    # block (plus the final): iterations=5 now runs 2 loop jobs instead
-    # of 5.  Work is identical -- every join/agg still executes exactly
-    # once, inside fewer, deeper jobs; at bench scale the loop was
-    # scheduling-bound (job launch + checkpoint write per round), at
-    # cluster scale fewer materialization barriers only helps.
-    checkpoint_every = 4
-    prev = None
+    e = None
     try:
-        for i in range(iterations):
-            full = (
-                e.join(maybe_bcast(ranks), "node")
-                .select(F.col("to").alias("node"), F.expr("r div deg").alias("c"))
-                .unionByName(zero_rows)
-                .groupBy("node")
-                .agg(F.sum("c").cast("long").alias("s"))
+        # Enforce the documented precondition LOUDLY: a dst-only (dangling)
+        # node has no degree row, so its rank semantics are undefined -- the
+        # two historical behaviors (excluded vs teleport-only row) differed
+        # silently depending on implementation details.  The probe rides the
+        # SAME job as the sizing stats (r16: one bounded 1-row action instead
+        # of two -- the loop is scheduling-bound at bench scale, guide §1.2).
+        # Size the edge partitioning to the data, not the session default:
+        # every iteration re-reads e, so 32 near-empty partitions x 5 rounds
+        # is pure scheduler overhead at bench scale, while a huge graph still
+        # fans out (~500k edge rows per partition, capped at 4x parallelism).
+        # One tiny agg over the degree table yields the node count (join
+        # strategy), the edge count (Σ deg = partition sizing) AND the
+        # dangling-destination count (precondition).
+        dangling_cnt = (
+            ed.select(F.col("to").alias("node"))
+            .distinct()
+            .join(deg.select("node"), "node", "left_anti")
+            .agg(F.count(F.lit(1)).alias("dg"))
+        )
+        stats = (
+            deg.agg(F.count(F.lit(1)).alias("n"), F.sum("deg").alias("ec"))
+            .crossJoin(dangling_cnt)
+            .first()
+        )
+        if stats["dg"]:
+            raise ValueError(
+                "pagerank_fixedpoint: edge list has dangling destination nodes "
+                "(no outgoing edges); symmetrize the graph or add self-loops first"
             )
-            ranks = full.select(
-                "node",
-                (F.lit(teleport) + F.expr(f"({DAMP_NUM} * s) div {DAMP_DEN}"))
-                .cast("long")
-                .alias("r"),
-            )
-            if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev is not None:
-                    _unpersist_checkpoint(prev)  # successor materialized; safe
-                prev = ranks
-        # Final materialization: one eager checkpoint executes every
-        # round since the last cadence checkpoint.
-        ranks = ranks.localCheckpoint(eager=True)
-        if prev is not None:
-            _unpersist_checkpoint(prev)
+        n_nodes, e_cnt = stats["n"], stats["ec"] or 0
+        sc_default = edges.sparkSession.sparkContext.defaultParallelism
+        e_parts = int(max(4, min(sc_default * 4, e_cnt // 500_000 + 1)))
+        e = (
+            ed.join(deg, "node")
+            .repartition(e_parts, "node")
+            .persist()
+        )
+        ranks = deg.select("node", F.lit(SCALE).cast("long").alias("r"))
+        teleport = (DAMP_DEN - DAMP_NUM) * SCALE // DAMP_DEN
+        maybe_bcast = F.broadcast if n_nodes <= broadcast_rank_rows else (lambda df: df)
+        # CHECKPOINT CADENCE (r16, guide §1.2 "the distributed algorithm"):
+        # each rank frame has exactly ONE downstream consumer (the next
+        # round's join), so nothing forces a materialization per round --
+        # the per-round eager checkpoint existed only to cap plan growth,
+        # and rank lineage grows LINEARLY (one join+agg per round), not
+        # exponentially like the 3-reference CC loop.  Rounds therefore
+        # chain lazily and materialize in ONE job per ``checkpoint_every``
+        # block (plus the final): iterations=5 now runs 2 loop jobs instead
+        # of 5.  Work is identical -- every join/agg still executes exactly
+        # once, inside fewer, deeper jobs; at bench scale the loop was
+        # scheduling-bound (job launch + checkpoint write per round), at
+        # cluster scale fewer materialization barriers only helps.
+        checkpoint_every = 4
+        with CheckpointChain() as side, CheckpointChain("graph.pagerank") as chain:
+            # Zero-contribution self rows keep EVERY node in the rank table
+            # each round (in-degree-0 nodes hold the bare teleport rank yet
+            # still push mass out); folding them into the aggregate input
+            # costs one map-side-combined union row per node -- an extra
+            # LEFT JOIN against the node set measured ~2x the whole query.
+            # The first round's materialization computes it once, every
+            # later round reads the persisted RDD.
+            zero_rows = side.push(deg.select("node", F.lit(0).cast("long").alias("c")))
+            for i in range(iterations):
+                full = (
+                    e.join(maybe_bcast(ranks), "node")
+                    .select(F.col("to").alias("node"), F.expr("r div deg").alias("c"))
+                    .unionByName(zero_rows)
+                    .groupBy("node")
+                    .agg(F.sum("c").cast("long").alias("s"))
+                )
+                ranks = full.select(
+                    "node",
+                    (F.lit(teleport) + F.expr(f"({DAMP_NUM} * s) div {DAMP_DEN}"))
+                    .cast("long")
+                    .alias("r"),
+                )
+                if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
+                    ranks = chain.push(ranks, eager=True)
+            # Final materialization: one eager checkpoint executes every
+            # round since the last cadence checkpoint.
+            ranks = chain.push(ranks, eager=True)
     finally:
-        e.unpersist()
-        ed.unpersist()
-        deg.unpersist()
-        _unpersist_checkpoint(zero_rows)
-    hold_pinned("graph.pagerank", ranks)
+        for frame in (e, ed, deg):
+            if frame is not None:
+                frame.unpersist()
     return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
@@ -200,11 +181,10 @@ def hierarchy_flatten(
     the recursive-CTE walk every warehouse writes, without H sequential
     passes.  ``parent_col`` NULL marks roots.
 
-    Same per-round ``localCheckpoint`` + supersede-unpersist discipline
-    as the CC/PageRank loops; converged rows stop changing (root
-    pointers are fixed points), and the loop exits early once no pointer
-    moved.  All-integer state -- the oracle replays it with a recursive
-    CTE bit-for-bit.
+    Converged rows stop changing (root pointers are fixed points), and
+    the loop exits early once no pointer moved (checkpoint chain:
+    ``loop.py``).  All-integer state -- the oracle replays it with a
+    recursive CTE bit-for-bit.
 
     A DANGLING parent pointer (parent id absent from ``nodes``) becomes
     that subtree's root label: the walk stops there with the depth
@@ -215,68 +195,67 @@ def hierarchy_flatten(
     depth coverage means 20 rounds handle any acyclic hierarchy ever
     seen in practice).
     """
-    state = nodes.select(
-        F.col(node_col).alias("node"),
-        F.coalesce(F.col(parent_col), F.col(node_col)).alias("anc"),
-        F.when(F.col(parent_col).isNull(), 0).otherwise(1).cast("long").alias("depth"),
-    ).localCheckpoint(eager=True)
-    prev = state
-    converged = False
-    # max_iter + 1 rounds: depth <= 2^max_iter resolves within max_iter
-    # doubling rounds, and convergence DETECTION (moved == 0) needs one
-    # further observation round -- without it, depths in
-    # (2^(max_iter-1), 2^max_iter] spuriously raised.
-    for _ in range(max_iter + 1):
+    moved: list[int] = []
+
+    def _double(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("node").alias("h_node"),
             F.col("anc").alias("h_anc"),
             F.col("depth").alias("h_depth"),
         )
-        stepped = (
-            state.join(hop, state["anc"] == hop["h_node"], "left")
-            .select(
-                "node",
-                F.coalesce(F.col("h_anc"), F.col("anc")).alias("anc"),
-                (F.col("depth") + F.coalesce(F.col("h_depth"), F.lit(0))).alias("depth"),
-                (F.coalesce(F.col("h_anc"), F.col("anc")) != F.col("anc"))
-                .cast("long")
-                .alias("__moved"),
+        return state.join(hop, state["anc"] == hop["h_node"], "left").select(
+            "node",
+            F.coalesce(F.col("h_anc"), F.col("anc")).alias("anc"),
+            (F.col("depth") + F.coalesce(F.col("h_depth"), F.lit(0))).alias("depth"),
+            (F.coalesce(F.col("h_anc"), F.col("anc")) != F.col("anc"))
+            .cast("long")
+            .alias("__moved"),
+        )
+
+    def _none_moved(frame: DataFrame) -> bool:
+        moved.append(frame.agg(F.sum("__moved")).first()[0] or 0)
+        return not moved[-1]
+
+    with CheckpointChain("graph.hierarchy") as chain:
+        start = chain.push(
+            nodes.select(
+                F.col(node_col).alias("node"),
+                F.coalesce(F.col(parent_col), F.col(node_col)).alias("anc"),
+                F.when(F.col(parent_col).isNull(), 0).otherwise(1).cast("long").alias("depth"),
+            ),
+            eager=True,
+        )
+        # max_iter + 1 rounds: depth <= 2^max_iter resolves within max_iter
+        # doubling rounds, and convergence DETECTION (moved == 0) needs one
+        # further observation round -- without it, depths in
+        # (2^(max_iter-1), 2^max_iter] spuriously raised.
+        final = fixpoint(
+            chain, start, _double, _none_moved, max_iter + 1,
+            view=lambda f: f.drop("__moved"),
+        )
+        if not moved or moved[-1]:
+            # Pointers still moving after the detection round: either the
+            # hierarchy is deeper than 2^max_iter (raise max_iter) or it
+            # contains a cycle whose length is not a power of two, where
+            # pointer chasing never stabilizes.  Returning the partial state
+            # would silently hand out wrong roots/depths.
+            raise RuntimeError(
+                f"hierarchy_flatten did not converge in {max_iter} rounds: "
+                "cycle in the parent pointers, or depth > 2^max_iter"
             )
-            # Lazy (r13, CC precedent): the convergence agg below is the
-            # round's ONLY job and materializes the checkpoint itself.
-            .localCheckpoint(eager=False)
-        )
-        moved = stepped.agg(F.sum("__moved")).first()[0] or 0
-        _unpersist_checkpoint(prev)
-        state = stepped.drop("__moved")
-        prev = stepped
-        if not moved:
-            converged = True
-            break
-    if not converged:
-        # Pointers still moving after the detection round: either the
-        # hierarchy is deeper than 2^max_iter (raise max_iter) or it
-        # contains a cycle whose length is not a power of two, where
-        # pointer chasing never stabilizes.  Returning the partial state
-        # would silently hand out wrong roots/depths.
-        hold_pinned("graph.hierarchy", prev)
-        raise RuntimeError(
-            f"hierarchy_flatten did not converge in {max_iter} rounds: "
-            "cycle in the parent pointers, or depth > 2^max_iter"
-        )
-    hold_pinned("graph.hierarchy", prev)
-    # POWER-OF-TWO-length cycles evade the moved-guard: jumps of 2^k land
-    # every cycle node back on ITSELF (2^k mod L == 0 only when L divides
-    # 2^k), a "converged" self-pointer with nonzero distance; all other
-    # cycle lengths keep moving and trip the guard above.  A true root
-    # has depth 0 by construction and a dangling root is absent from the
-    # node set, so anc == node with depth > 0 proves a cycle.
-    n_cycle = state.filter((F.col("anc") == F.col("node")) & (F.col("depth") > 0)).count()
-    if n_cycle:
-        raise RuntimeError(
-            f"hierarchy contains a cycle ({n_cycle} self-converged nodes "
-            "with nonzero depth); roots/depths are undefined"
-        )
+        state = final.drop("__moved")
+        # POWER-OF-TWO-length cycles evade the moved-guard: jumps of 2^k land
+        # every cycle node back on ITSELF (2^k mod L == 0 only when L divides
+        # 2^k), a "converged" self-pointer with nonzero distance; all other
+        # cycle lengths keep moving and trip the guard above.  A true root
+        # has depth 0 by construction and a dangling root is absent from the
+        # node set, so anc == node with depth > 0 proves a cycle.
+        n_cycle = state.filter((F.col("anc") == F.col("node")) & (F.col("depth") > 0)).count()
+        if n_cycle:
+            raise RuntimeError(
+                f"hierarchy contains a cycle ({n_cycle} self-converged nodes "
+                "with nonzero depth); roots/depths are undefined"
+            )
     return state.select("node", F.col("anc").alias("root"), "depth")
 
 
@@ -327,20 +306,33 @@ def bfs_distances(
 
     Scale posture: per round one join keyed on the edge src (the cached
     edge partitioning is reused across rounds) + one map-side-combinable
-    min.  Frontier rows are (node, int) pairs; ``localCheckpoint`` per
-    round caps plan growth, superseded checkpoints released -- the same
-    loop discipline as connected_components/pagerank.  max_depth bounds
-    work: this is the bounded-reachability primitive (ego networks,
-    blast-radius audits), not all-pairs.
+    min.  Frontier rows are (node, int) pairs (checkpoint chain:
+    ``loop.py``).  max_depth bounds work: this is the bounded-
+    reachability primitive (ego networks, blast-radius audits), not
+    all-pairs.
     """
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")).cache()
-    # Lifecycle bookkeeping tracks the CHECKPOINT FRAMES themselves, never
-    # a projection over one: _unpersist_checkpoint/hold_pinned inspect the
-    # analyzed plan for a bare LogicalRDD, so a `.drop()` view would make
-    # every release a silent no-op and leak one frontier frame per round
-    # (r8 review finding).  `dist` below is always a thin view over the
-    # newest chain entry.
-    #
+
+    def _relax(dist: DataFrame) -> DataFrame:
+        relaxed = (
+            e.join(dist, F.col("e_src") == F.col("node"))
+            .groupBy(F.col("e_dst").alias("node"))
+            .agg((F.min("dist") + 1).alias("nd"))
+        )
+        return dist.join(relaxed, "node", "full").select(
+            "node",
+            F.least(
+                F.coalesce(F.col("dist"), F.col("nd")),
+                F.coalesce(F.col("nd"), F.col("dist")),
+            ).alias("dist"),
+            (F.col("dist").isNull()).cast("long").alias("__new"),
+        )
+
+    def _none_new(frame: DataFrame) -> bool:
+        # A checked round that reached no new node is the fixpoint: unit
+        # edges give a node first reached in round k its exact dist k.
+        return not (frame.agg(F.sum("__new")).first()[0] or 0)
+
     # CONVERGENCE-CHECK CADENCE (r16): every round still lazy-checkpoints
     # (the frame feeds TWO consumers next round -- relax and fold -- so
     # the persisted RDD dedups them), but the convergence agg runs only
@@ -351,58 +343,21 @@ def bfs_distances(
     # and the check breaks only when the CHECKED round added nothing,
     # which IS the fixpoint.  Worst case one extra no-op round of joins
     # runs inside the same job -- at bench scale the loop cost is job
-    # scheduling, not joins (guide §1.2).  ``chain`` holds the not-yet-
-    # released checkpoints; entries before the materialized tail are
-    # superseded and released together after each check.
-    check_every = 2
-    chain: list[DataFrame] = [
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
-    ]
-    dist = chain[-1]
+    # scheduling, not joins (guide §1.2).
     try:
-        for r in range(1, max_depth + 1):
-            relaxed = (
-                e.join(dist, F.col("e_src") == F.col("node"))
-                .groupBy(F.col("e_dst").alias("node"))
-                .agg((F.min("dist") + 1).alias("nd"))
+        with CheckpointChain("graph.bfs") as chain:
+            start = chain.push(
+                seeds.select(F.col(seed_col).alias("node"))
+                .distinct()
+                .withColumn("dist", F.lit(0).cast("long"))
             )
-            stepped_ckpt = (
-                dist.join(relaxed, "node", "full")
-                .select(
-                    "node",
-                    F.least(
-                        F.coalesce(F.col("dist"), F.col("nd")),
-                        F.coalesce(F.col("nd"), F.col("dist")),
-                    ).alias("dist"),
-                    (F.col("dist").isNull()).cast("long").alias("__new"),
-                )
-                .localCheckpoint(eager=False)
+            final = fixpoint(
+                chain, start, _relax, _none_new, max_depth,
+                check_every=2, view=lambda f: f.drop("__new"),
             )
-            chain.append(stepped_ckpt)
-            dist = stepped_ckpt.drop("__new")
-            if r % check_every == 0 or r == max_depth:
-                # This agg materializes every chain entry back to the
-                # last materialized one (lazy checkpoints persist as the
-                # job computes through them).
-                n_new = stepped_ckpt.agg(F.sum("__new")).first()[0] or 0
-                for f in chain[:-1]:
-                    _unpersist_checkpoint(f)
-                chain = [stepped_ckpt]
-                if not n_new:
-                    # the checked round added no node: distances of
-                    # already-reached nodes reached their exact values in
-                    # earlier rounds (unit edges: a node first reached in
-                    # round k has exact dist k), so this is the fixpoint
-                    break
     finally:
         e.unpersist()
-    for f in chain[:-1]:
-        _unpersist_checkpoint(f)
-    hold_pinned("graph.bfs", chain[-1])
-    return dist
+    return final.drop("__new")
 
 
 def temporal_reachability(
@@ -428,65 +383,57 @@ def temporal_reachability(
     ``bfs_distances``).
 
     Round = one join keyed on the cached edge src (+ the availability
-    predicate) + one map-side-combinable min + full-join fold;
-    localCheckpoint per round with eager release, checkpoint frames
-    pinned per the registry discipline.  Output: ``(node, d)`` --
-    earliest arrival for every node reached within ``rounds`` hops.
+    predicate) + one map-side-combinable min + full-join fold
+    (checkpoint chain: ``loop.py``).  Output: ``(node, d)`` -- earliest
+    arrival for every node reached within ``rounds`` hops.
     """
-    from pyspark.sql import functions as F
-
     e = edges.select(
         F.col(src).alias("e_src"),
         F.col(dst).alias("e_dst"),
         F.col(avail).alias("e_avail"),
         F.col(arr).alias("e_arr"),
     ).cache()
-    # All-lazy round chain (r16): this loop has NO per-round convergence
-    # decision, so nothing needs a per-round action at all -- each round
-    # lazy-checkpoints (the state frame feeds two consumers next round:
-    # relax + fold, and the persisted RDD dedups them), and ONE
-    # ``count()`` at the end materializes the whole chain in a single
-    # job (rounds jobs -> 1; the count cannot prune columns because the
-    # checkpoint pins the physical RDD).  Work per round is unchanged;
-    # only the per-round job launch + materialization barrier go away.
-    chain: list[DataFrame] = [
-        seeds.select(F.col(seed_col).alias("node"), F.col(seed_date_col).alias("d"))
-        .groupBy("node")
-        .agg(F.min("d").alias("d"))
-        .localCheckpoint(eager=False)
-    ]
-    state = chain[-1]
+
+    def _relax(state: DataFrame) -> DataFrame:
+        relaxed = (
+            e.join(
+                state,
+                (F.col("e_src") == F.col("node"))
+                & (F.col("e_avail") >= F.col("d")),
+            )
+            .groupBy(F.col("e_dst").alias("rnode"))
+            .agg(F.min("e_arr").alias("nd"))
+        )
+        return state.join(relaxed, state["node"] == relaxed["rnode"], "full").select(
+            F.coalesce(F.col("node"), F.col("rnode")).alias("node"),
+            F.least(
+                F.coalesce(F.col("d"), F.col("nd")),
+                F.coalesce(F.col("nd"), F.col("d")),
+            ).alias("d"),
+        )
+
+    def _materialize(frame: DataFrame) -> bool:
+        frame.count()
+        return False
+
+    # All-lazy round chain (r16): this loop has NO convergence decision,
+    # so its only check is on the last round -- ONE ``count()``
+    # materializes the whole chain in a single job (rounds jobs -> 1; the
+    # count cannot prune columns because the checkpoint pins the physical
+    # RDD).  Each round still lazy-checkpoints: the state frame feeds two
+    # consumers next round (relax + fold), and the persisted RDD dedups
+    # them.
     try:
-        for _ in range(rounds):
-            relaxed = (
-                e.join(
-                    state,
-                    (F.col("e_src") == F.col("node"))
-                    & (F.col("e_avail") >= F.col("d")),
-                )
-                .groupBy(F.col("e_dst").alias("rnode"))
-                .agg(F.min("e_arr").alias("nd"))
+        with CheckpointChain("graph.temporal") as chain:
+            start = chain.push(
+                seeds.select(F.col(seed_col).alias("node"), F.col(seed_date_col).alias("d"))
+                .groupBy("node")
+                .agg(F.min("d").alias("d"))
             )
-            stepped_ckpt = (
-                state.join(relaxed, state["node"] == relaxed["rnode"], "full")
-                .select(
-                    F.coalesce(F.col("node"), F.col("rnode")).alias("node"),
-                    F.least(
-                        F.coalesce(F.col("d"), F.col("nd")),
-                        F.coalesce(F.col("nd"), F.col("d")),
-                    ).alias("d"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            chain.append(stepped_ckpt)
-            state = stepped_ckpt
-        state.count()  # one job materializes every round's checkpoint
+            final = fixpoint(chain, start, _relax, _materialize, rounds, check_every=rounds)
     finally:
         e.unpersist()
-    for f in chain[:-1]:
-        _unpersist_checkpoint(f)
-    hold_pinned("graph.temporal", chain[-1])
-    return state
+    return final
 
 
 def shortest_paths_bounded(
@@ -511,10 +458,7 @@ def shortest_paths_bounded(
 
     Per round: ONE join keyed on the cached edge src + one map-side-
     combinable min + a full-join fold; frontier rows are (node, long)
-    pairs.  ``localCheckpoint`` per round caps plan growth (the frame
-    feeds both the fold and the next join), superseded checkpoints
-    released eagerly -- the shared loop discipline of BFS / PageRank /
-    connected components.  Early exit when a round improves nothing:
+    pairs (checkpoint chain: ``loop.py``).  Early exit when a round improves nothing:
     with non-negative weights, min-plus relaxation is monotone
     non-increasing, so an unchanged round IS the bounded fixpoint.
     """
@@ -523,57 +467,48 @@ def shortest_paths_bounded(
         F.col(dst).alias("e_dst"),
         F.col(weight).cast("long").alias("e_w"),
     ).cache()
+
+    def _relax(dist: DataFrame) -> DataFrame:
+        relaxed = (
+            e.join(dist, F.col("e_src") == F.col("node"))
+            .groupBy(F.col("e_dst").alias("rnode"))
+            .agg(F.min(F.col("dist") + F.col("e_w")).alias("nd"))
+        )
+        return dist.join(relaxed, dist["node"] == relaxed["rnode"], "full").select(
+            F.coalesce(F.col("node"), F.col("rnode")).alias("node"),
+            F.least(
+                F.coalesce(F.col("dist"), F.col("nd")),
+                F.coalesce(F.col("nd"), F.col("dist")),
+            ).alias("dist"),
+            (
+                F.col("dist").isNull()
+                | (F.col("nd") < F.col("dist"))
+            ).cast("long").alias("__chg"),
+        )
+
+    def _none_improved(frame: DataFrame) -> bool:
+        return not (frame.agg(F.sum("__chg")).first()[0] or 0)
+
     # Same convergence-check cadence as ``bfs_distances`` (r16): lazy
     # checkpoint per round (the dist frame feeds relax + fold), one
     # materializing improvement-count job per ``check_every`` rounds.
     # Min-plus relaxation is idempotent at the fixpoint, so checking
     # only every other round breaks exactly when the checked round
     # improved nothing -- the same bounded answer.
-    check_every = 2
-    chain: list[DataFrame] = [
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=False)
-    ]
-    dist = chain[-1]
     try:
-        for r in range(1, rounds + 1):
-            relaxed = (
-                e.join(dist, F.col("e_src") == F.col("node"))
-                .groupBy(F.col("e_dst").alias("rnode"))
-                .agg(F.min(F.col("dist") + F.col("e_w")).alias("nd"))
+        with CheckpointChain("graph.sssp") as chain:
+            start = chain.push(
+                seeds.select(F.col(seed_col).alias("node"))
+                .distinct()
+                .withColumn("dist", F.lit(0).cast("long"))
             )
-            stepped_ckpt = (
-                dist.join(relaxed, dist["node"] == relaxed["rnode"], "full")
-                .select(
-                    F.coalesce(F.col("node"), F.col("rnode")).alias("node"),
-                    F.least(
-                        F.coalesce(F.col("dist"), F.col("nd")),
-                        F.coalesce(F.col("nd"), F.col("dist")),
-                    ).alias("dist"),
-                    (
-                        F.col("dist").isNull()
-                        | (F.col("nd") < F.col("dist"))
-                    ).cast("long").alias("__chg"),
-                )
-                .localCheckpoint(eager=False)
+            final = fixpoint(
+                chain, start, _relax, _none_improved, rounds,
+                check_every=2, view=lambda f: f.drop("__chg"),
             )
-            chain.append(stepped_ckpt)
-            dist = stepped_ckpt.drop("__chg")
-            if r % check_every == 0 or r == rounds:
-                n_chg = stepped_ckpt.agg(F.sum("__chg")).first()[0] or 0
-                for f in chain[:-1]:
-                    _unpersist_checkpoint(f)
-                chain = [stepped_ckpt]
-                if not n_chg:
-                    break
     finally:
         e.unpersist()
-    for f in chain[:-1]:
-        _unpersist_checkpoint(f)
-    hold_pinned("graph.sssp", chain[-1])
-    return dist
+    return final.drop("__chg")
 
 
 def _build_undirected_kcore(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -615,8 +550,8 @@ def kcore_bounded(
     Early exit on node-count equality alone is sound BECAUSE peeling
     is monotone (the alive set only shrinks, so equal count == equal
     set).  Per round: two semi-joins against the cached undirected
-    edge frame + one map-side-combinable count; localCheckpoint per
-    round, superseded checkpoints released (shared loop discipline).
+    edge frame + one map-side-combinable count (checkpoint chain:
+    ``loop.py``).
 
     ``prebuilt_undirected=True`` declares the input ALREADY holds both
     edge directions, distinct, as (src, dst) -- callers that computed
@@ -633,10 +568,21 @@ def kcore_bounded(
     else:
         und = _build_undirected_kcore(edges, src, dst)
 
-    # Lifecycle discipline: the chain always holds the CHECKPOINT frames
-    # themselves -- never a .select() projection over one, which would
-    # make _unpersist_checkpoint a silent no-op (the r8 leak class).
-    #
+    counts: list[int] = []
+
+    def _peel(alive: DataFrame) -> DataFrame:
+        return (
+            und.join(alive.select(F.col("node").alias("s")), "s", "semi")
+            .join(alive.select(F.col("node").alias("d")), "d", "semi")
+            .groupBy(F.col("s").alias("node"))
+            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+            .filter(F.col("deg") >= k)
+        )
+
+    def _unchanged(frame: DataFrame) -> bool:
+        counts.append(frame.count())
+        return len(counts) > 1 and counts[-1] == counts[-2]
+
     # Survivor-count cadence: every round lazy-checkpoints (the alive
     # set feeds BOTH semi-joins next round), the survivor count runs
     # every ``check_every``-th round and on the last, and the loop
@@ -655,39 +601,16 @@ def kcore_bounded(
     # (the first check needs no baseline -- the break compares two
     # CHECKED rounds) (rounds=4 on a non-converging graph: 7 jobs ->
     # 5; converging at round 3: 7 -> 4).
-    check_every = 1
-    chain: list[DataFrame] = [
-        und.select(F.col("s").alias("node")).distinct().localCheckpoint(eager=False)
-    ]
-    alive = chain[-1]
-    n_checked = None
-    deg = None
     try:
-        for r in range(1, rounds + 1):
-            deg = (
-                und.join(alive.select(F.col("node").alias("s")), "s", "semi")
-                .join(alive.select(F.col("node").alias("d")), "d", "semi")
-                .groupBy(F.col("s").alias("node"))
-                .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-                .filter(F.col("deg") >= k)
-                .localCheckpoint(eager=False)
+        with CheckpointChain("graph.kcore") as chain:
+            start = chain.push(und.select(F.col("s").alias("node")).distinct())
+            final = fixpoint(
+                chain, start, _peel, _unchanged, rounds,
+                check_every=1, view=lambda f: f.select("node"),
             )
-            chain.append(deg)
-            alive = deg.select("node")
-            if r % check_every == 0 or r == rounds:
-                n_new = deg.count()
-                for f in chain[:-1]:
-                    _unpersist_checkpoint(f)
-                chain = [deg]
-                if n_new == n_checked:
-                    break
-                n_checked = n_new
     finally:
         und.unpersist()
-    for f in chain[:-1]:
-        _unpersist_checkpoint(f)
-    hold_pinned("graph.kcore", chain[-1])
-    return deg if deg is not None else chain[-1].withColumn("deg", F.lit(None).cast("long"))
+    return final if rounds >= 1 else final.withColumn("deg", F.lit(None).cast("long"))
 
 
 def hits_fixedpoint(
@@ -710,11 +633,9 @@ def hits_fixedpoint(
     in-degree * scale^2 must stay < 2^63, i.e. degree < ~9e3 at the
     default scale; shrink ``scale`` for denser graphs).
 
-    Loop discipline (the PageRank/CC pattern): edges distinct +
-    persisted pre-partitioned once; each half-step is one equi-join +
-    map-side-combinable sum; the per-round max is a bounded 1-row
-    collect; frames localCheckpoint per half-step with superseded-
-    checkpoint release.
+    Edges are made distinct and persisted once; each half-step is one
+    equi-join + map-side-combinable sum, and its max is a bounded 1-row
+    collect (checkpoint chains: ``loop.py``, one per side).
 
     Returns ``(hubs, auths)`` as ``(node, score_fp)`` frames.
     """
@@ -734,50 +655,35 @@ def hits_fixedpoint(
     # per-half sums (whose max agg is the half-step's one job and whose
     # RDD the next half's join reads), halving checkpoint writes and
     # dropping the two final materialization jobs (8 -> 6 per
-    # 3-iteration run).  The PINNED frames are the raw checkpoints (the
-    # returned selects are thin views over them; pinning a projection
-    # would silently break release -- the r8 rule).
-    hubs_raw = None  # checkpoint backing `hubs`; None while hubs is the seed
-    auths_raw = None
+    # 3-iteration run).
     hubs = e.select(F.col("s").alias("node")).distinct().select(
         "node", F.lit(scale).cast("long").alias("r")
     )
-    auths = None
-    supers: list[DataFrame] = []
 
-    def _half(frame: DataFrame, edge_key: str, out_key: str):
-        raw = (
+    def _half(chain: CheckpointChain, frame: DataFrame, edge_key: str, out_key: str):
+        raw = chain.push(
             e.join(frame.withColumnRenamed("node", edge_key), edge_key)
             .groupBy(F.col(out_key).alias("node"))
             .agg(F.sum("r").cast("long").alias("s"))
         )
-        # Lazy checkpoint (r13, CC precedent): the per-half max agg is
-        # the half-step's ONLY job -- it materializes `raw` (and the
-        # seed/previous normalization riding in its lineage).
-        raw = raw.localCheckpoint(eager=False)
-        supers.append(raw)
         mx = raw.agg(F.max("s")).first()[0]
+        chain.settle()
         if mx is None:
             raise ValueError("hits_fixedpoint: empty edge list")
-        out = raw.select(
+        return raw.select(
             "node",
             F.expr(f"(s * {int(scale)}) div {int(mx)}").cast("long").alias("r"),
         )
-        return raw, out
 
     try:
-        for _ in range(iterations):
-            auths_raw, auths = _half(hubs, "s", "d")
-            hubs_raw, hubs = _half(auths, "d", "s")
+        with CheckpointChain("graph.hits_hubs") as hub_chain, CheckpointChain(
+            "graph.hits_auths"
+        ) as auth_chain:
+            for _ in range(iterations):
+                auths = _half(auth_chain, hubs, "s", "d")
+                hubs = _half(hub_chain, auths, "d", "s")
     finally:
         e.unpersist()
-        # Release every superseded raw checkpoint except the two finals
-        # (already materialized by their own max aggs).
-        for f in supers:
-            if f is not hubs_raw and f is not auths_raw:
-                _unpersist_checkpoint(f)
-    hold_pinned("graph.hits_hubs", hubs_raw)
-    hold_pinned("graph.hits_auths", auths_raw)
     return (
         hubs.select("node", F.col("r").alias("score_fp")),
         auths.select("node", F.col("r").alias("score_fp")),

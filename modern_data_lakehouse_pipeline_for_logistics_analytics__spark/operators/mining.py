@@ -54,12 +54,13 @@ def frequent_pairs(
         # and materializes the checkpoint -- one job, not two.
         .localCheckpoint(eager=False)
     )
-    hold_pinned("mining.frequent_pairs", items)
-    # Superseding the checkpoint above invalidates any itemcf pair cache
-    # rooted in the PREVIOUS one: evicted cached partitions would
-    # recompute through a dead checkpoint and fail with missing blocks
-    # (r15 advice).  Drop the dependent entry with its root.
+    # Superseding the previous checkpoint invalidates any itemcf pair
+    # cache rooted in it: evicted cached partitions would recompute
+    # through a dead checkpoint and fail with missing blocks (r15
+    # advice).  Drop the dependent entry BEFORE its root goes, so no
+    # reader of it can race the release.
     release_sig_cache("mining.itemcf_pairs")
+    hold_pinned("mining.frequent_pairs", items)
     n_baskets = items.select("basket").distinct().count()
     item_counts = items.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_i"))
     frequent = item_counts.filter(F.col("n_i") >= min_support)

@@ -850,17 +850,17 @@ def power_iteration_topvec(
     with the d-row vector; per-iteration cost is one join + one
     map-side-combinable sum + one 1-row max -- independent of the corpus
     rows that built the Gram.  Each round's ``w`` is eagerly
-    localCheckpoint-ed (the CC/PageRank/BFS loop discipline): ``w``
-    feeds BOTH the max subquery and the renormalized vector, so an
-    uncheckpointed loop embeds TWO copies of the previous round per
-    round -- a 2^k plan blowup that measured 24s for 6 rounds at sf0.1
-    versus ~1s checkpointed.  Superseded checkpoints are released; the
-    final one is pinned under ``similarity.power``.
+    checkpointed: ``w`` feeds BOTH the max subquery and the renormalized
+    vector, so an uncheckpointed loop embeds TWO copies of the previous
+    round per round -- a 2^k plan blowup that measured 24s for 6 rounds
+    at sf0.1 versus ~1s checkpointed.  Checkpoint chain: ``loop.py``;
+    the final ``w`` is pinned under ``similarity.power``.
 
     Output: ``(node, eigvec_fp)`` -- components in vec_scale units, the
     dominant component at +-vec_scale.
     """
-    from .dedup import _unpersist_checkpoint, hold_pinned
+    from .loop import CheckpointChain
+
     full = cells.select(
         F.col("i").alias("fi"),
         F.col("j").alias("fj"),
@@ -878,28 +878,23 @@ def power_iteration_topvec(
     v = full.select(F.col("fi").alias("node")).distinct().withColumn(
         "val", F.lit(vec_scale).cast("long")
     )
-    prev_ckpt = None
-    for _ in range(iterations):
-        w_ckpt = (
-            full.join(v, full["fj"] == v["node"])
-            .groupBy(F.col("fi").alias("wnode"))
-            .agg(F.sum(F.col("g") * F.col("val")).alias("w"))
-            .localCheckpoint(eager=True)
-        )
-        if prev_ckpt is not None:
-            _unpersist_checkpoint(prev_ckpt)  # successor materialized; safe
-        prev_ckpt = w_ckpt
-        m = w_ckpt.agg(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.expr(f"(max(abs(w)) + {vec_scale - 1}) div {vec_scale}"),
-            ).alias("__m")
-        )
-        v = w_ckpt.crossJoin(F.broadcast(m)).select(
-            F.col("wnode").alias("node"), F.expr("w div __m").alias("val")
-        )
-    if prev_ckpt is not None:
-        hold_pinned("similarity.power", prev_ckpt)
+    with CheckpointChain("similarity.power") as chain:
+        for _ in range(iterations):
+            w = chain.push(
+                full.join(v, full["fj"] == v["node"])
+                .groupBy(F.col("fi").alias("wnode"))
+                .agg(F.sum(F.col("g") * F.col("val")).alias("w")),
+                eager=True,
+            )
+            m = w.agg(
+                F.greatest(
+                    F.lit(1).cast("long"),
+                    F.expr(f"(max(abs(w)) + {vec_scale - 1}) div {vec_scale}"),
+                ).alias("__m")
+            )
+            v = w.crossJoin(F.broadcast(m)).select(
+                F.col("wnode").alias("node"), F.expr("w div __m").alias("val")
+            )
     return v.select("node", F.col("val").alias("eigvec_fp"))
 
 

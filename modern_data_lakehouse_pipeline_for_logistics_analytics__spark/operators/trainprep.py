@@ -454,8 +454,7 @@ def bpe_learn_merges(
     back to the driver as ONE row (the same bounded-reduce pattern as
     the k-means centroid collect); the greedy merge is two window
     passes + two broadcast-shaped left anti/semi joins, all keyed by
-    word.  ``localCheckpoint`` per round caps plan growth, superseded
-    checkpoints released eagerly (shared loop discipline).
+    word (checkpoint chain: ``loop.py``).
 
     Greedy left-to-right semantics, exactly: within each maximal RUN of
     consecutive match positions, every other position starting from the
@@ -477,7 +476,7 @@ def bpe_learn_merges(
     ENCODING of every distinct word under the learned vocabulary; the
     frame is localCheckpoint-backed and registered under the pinned-
     cache key ``bpe_symbols`` (released by ``dedup.release_caches``)."""
-    from .dedup import _unpersist_checkpoint
+    from .loop import CheckpointChain
 
     words = (
         df.select(F.explode(tokenize(text_col)).alias("wid"))
@@ -497,9 +496,9 @@ def bpe_learn_merges(
     ).select("wid", "n", F.col("pos").cast("long").alias("pos"), "sym")
 
     wseq = Window.partitionBy("wid").orderBy("pos")
-    # Lazy checkpoints (r13, CC precedent): each round's top-pair collect
-    # is the only job per round -- it materializes the round's pending
-    # lazy checkpoints (round 1 materializes the base).
+    # Each round's top-pair collect is the only job per round -- it
+    # materializes the round's pending lazy checkpoints (round 1
+    # materializes the base).
     #
     # r16: the round's lead()-window frame ``tt`` is ALSO checkpointed
     # (lazily -- the collect materializes it in the same job).  Without
@@ -512,99 +511,69 @@ def bpe_learn_merges(
     # per round and every other reader hits the persisted RDD -- same
     # results, same one job per round, ~3 fewer window passes over the
     # symbol table per merge round (guide §2.4, duplicated subtrees).
-    t = base.localCheckpoint(eager=False)
-    live: list[DataFrame] = [t]  # pending frames; released once superseded
     merges: list[tuple[int, str, str, int]] = []
-    for r in range(1, rounds + 1):
-        tt = t.withColumn("__nxt", F.lead("sym").over(wseq)).localCheckpoint(
-            eager=False
-        )
-        live.append(tt)
-        top = (
-            tt.filter(F.col("__nxt").isNotNull())
-            .groupBy("sym", "__nxt")
-            .agg(F.sum("n").cast("long").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("sym"), F.asc("__nxt"))
-            .limit(1)
-            .collect()
-        )
-        # The collect materialized ``tt`` (and through its lineage every
-        # older pending frame); only ``tt`` feeds the rest of the round
-        # and only ``t`` can still be returned (the no-pairs break), so
-        # everything else is superseded now.
-        for f in live:
-            if f is not tt and f is not t:
-                _unpersist_checkpoint(f)
-        live = [f for f in live if f is tt or f is t]
-        if not top:
-            # No pair left to merge: the previous symbol table is final.
-            _unpersist_checkpoint(tt)
-            live = [t]
-            break
-        x, y, cnt = top[0]["sym"], top[0]["__nxt"], top[0]["cnt"]
-        merges.append((r, x, y, int(cnt)))
-        m = (
-            tt.filter((F.col("sym") == x) & (F.col("__nxt") == y))
-            .select("wid", "pos")
-            .withColumn("__rn", F.row_number().over(wseq))
-            .withColumn("__grp", F.col("pos") - F.col("__rn"))
-        )
-        sel = (
-            m.withColumn(
-                "__rmin", F.min("pos").over(Window.partitionBy("wid", "__grp"))
+    with CheckpointChain("bpe_symbols" if return_symbols else None) as chain:
+        t = chain.push(base)
+        for r in range(1, rounds + 1):
+            tt = chain.push(t.withColumn("__nxt", F.lead("sym").over(wseq)))
+            top = (
+                tt.filter(F.col("__nxt").isNotNull())
+                .groupBy("sym", "__nxt")
+                .agg(F.sum("n").cast("long").alias("cnt"))
+                .orderBy(F.desc("cnt"), F.asc("sym"), F.asc("__nxt"))
+                .limit(1)
+                .collect()
             )
-            .filter(((F.col("pos") - F.col("__rmin")) % 2) == 0)
-            .select("wid", "pos")
-            .localCheckpoint(eager=False)
-        )
-        live.append(sel)
-        starts = sel.withColumn("__is_start", F.lit(1))
-        drops = sel.select(
-            "wid", (F.col("pos") + 1).alias("pos"), F.lit(1).alias("__is_drop")
-        )
-        stepped = (
-            tt.join(starts, ["wid", "pos"], "left")
-            .join(drops, ["wid", "pos"], "left")
-            .filter(F.col("__is_drop").isNull())
-            .select(
-                "wid",
-                "n",
-                F.col("pos").alias("__oldpos"),
-                F.when(
-                    F.col("__is_start") == 1, F.concat(F.col("sym"), F.col("__nxt"))
+            chain.settle()
+            if not top:
+                # No pair left to merge: the previous symbol table is final.
+                t = tt.drop("__nxt")
+                break
+            x, y, cnt = top[0]["sym"], top[0]["__nxt"], top[0]["cnt"]
+            merges.append((r, x, y, int(cnt)))
+            m = (
+                tt.filter((F.col("sym") == x) & (F.col("__nxt") == y))
+                .select("wid", "pos")
+                .withColumn("__rn", F.row_number().over(wseq))
+                .withColumn("__grp", F.col("pos") - F.col("__rn"))
+            )
+            sel = chain.push(
+                m.withColumn(
+                    "__rmin", F.min("pos").over(Window.partitionBy("wid", "__grp"))
                 )
-                .otherwise(F.col("sym"))
-                .alias("sym"),
+                .filter(((F.col("pos") - F.col("__rmin")) % 2) == 0)
+                .select("wid", "pos")
             )
-            .withColumn(
-                "pos",
-                (
-                    F.row_number().over(
-                        Window.partitionBy("wid").orderBy("__oldpos")
+            starts = sel.withColumn("__is_start", F.lit(1))
+            drops = sel.select(
+                "wid", (F.col("pos") + 1).alias("pos"), F.lit(1).alias("__is_drop")
+            )
+            t = chain.push(
+                tt.join(starts, ["wid", "pos"], "left")
+                .join(drops, ["wid", "pos"], "left")
+                .filter(F.col("__is_drop").isNull())
+                .select(
+                    "wid",
+                    "n",
+                    F.col("pos").alias("__oldpos"),
+                    F.when(
+                        F.col("__is_start") == 1, F.concat(F.col("sym"), F.col("__nxt"))
                     )
-                    - 1
-                ).cast("long"),
+                    .otherwise(F.col("sym"))
+                    .alias("sym"),
+                )
+                .withColumn(
+                    "pos",
+                    (
+                        F.row_number().over(
+                            Window.partitionBy("wid").orderBy("__oldpos")
+                        )
+                        - 1
+                    ).cast("long"),
+                )
+                .select("wid", "n", "pos", "sym")
             )
-            .select("wid", "n", "pos", "sym")
-            .localCheckpoint(eager=False)
-        )
-        live.append(stepped)
-        t = stepped
-    if len(live) > 1:
-        # The final `t` is a lazy checkpoint nobody has computed yet
-        # whose parents are materialized lineage-CUT frames: materialize
-        # it BEFORE releasing them or it becomes unrecomputable.
-        t.count()
-        for f in live:
-            if f is not t:
-                _unpersist_checkpoint(f)
-    if return_symbols:
-        from .dedup import hold_pinned
-
-        hold_pinned("bpe_symbols", t)
-        return merges, t
-    _unpersist_checkpoint(t)
-    return merges
+    return (merges, t) if return_symbols else merges
 
 
 def bpe_encode_stats(

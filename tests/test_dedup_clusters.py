@@ -1,10 +1,5 @@
-"""Connected-components r13 hardening: the measured-size broadcast knob
-must (a) produce byte-identical clusters to the default shuffle path and
-(b) actually plan broadcast-hash joins when enabled -- otherwise it's a
-dead parameter.  The shuffle path stays the local-mode default (A/B in
-the operator docstring: broadcast loses in single-JVM mode)."""
-
-from pyspark.sql import functions as F
+"""Connected components over string doc ids: the canonical label of every
+component is its minimum doc id."""
 
 from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.dedup import (
     connected_components,
@@ -22,51 +17,21 @@ def _pairs(spark):
     return spark.createDataFrame(edges, "doc_a string, doc_b string")
 
 
-def test_broadcast_path_matches_shuffle_path(spark):
-    shuffle = {
+def test_canonical_labels_default_path(spark):
+    labels = {
         (r.doc, r.canonical)
         for r in connected_components(_pairs(spark)).collect()
     }
-    bcast = {
-        (r.doc, r.canonical)
-        for r in connected_components(
-            _pairs(spark), broadcast_threshold=1_000_000
-        ).collect()
-    }
-    assert shuffle == bcast
-    assert {c for _, c in shuffle} == {"a0", "b0", "t0", "x"}
+    assert {c for _, c in labels} == {"a0", "b0", "t0", "x"}
 
 
-def test_broadcast_threshold_respected(spark):
-    """Below-threshold corpus -> broadcast joins planned inside the round;
-    threshold 0 (default) -> no BroadcastHashJoin anywhere.  Asserted on
-    the round body's own plan, rebuilt exactly as the operator builds it,
-    since the loop's intermediate frames aren't exposed."""
-    pairs = _pairs(spark)
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
+def test_earlier_result_survives_a_later_call(spark):
+    """One query can hold several CC results at once (a cohort digest
+    unions five): a later call must not release an earlier result's
+    pinned labels before it is read."""
+    first = connected_components(_pairs(spark))
+    second = connected_components(
+        spark.createDataFrame([("p", "q"), ("q", "r")], "doc_a string, doc_b string")
     )
-    labels = (
-        edges.select(F.col("src").alias("doc"))
-        .distinct()
-        .withColumn("canonical", F.col("doc"))
-        .localCheckpoint()
-    )
-    hinted = edges.join(F.broadcast(labels), edges["dst"] == labels["doc"])
-    unhinted = edges.join(labels, edges["dst"] == labels["doc"])
-    assert "BroadcastHashJoin" in hinted._jdf.queryExecution().executedPlan().toString()
-    # The label frame is a stat-less LogicalRDD leaf: without the hint the
-    # planner must NOT broadcast it (this is the premise the knob exists for).
-    assert (
-        "BroadcastHashJoin"
-        not in unhinted._jdf.queryExecution().executedPlan().toString()
-    )
+    assert {r.canonical for r in first.collect()} == {"a0", "b0", "t0", "x"}
+    assert {r.canonical for r in second.collect()} == {"p"}
