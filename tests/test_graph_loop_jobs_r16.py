@@ -12,57 +12,13 @@ pin the scheduling shape -- the number of driver-side actions one
 operator call issues -- so a refactor that quietly reintroduces
 per-round actions fails here first.
 
-Raw Spark job counts are NOT a usable pin under AQE (every materialized
-shuffle stage is its own job; a 5-round pagerank on an 8-node chain
-shows ~30), so the counter wraps the DataFrame action surface the
-operators use: ``collect`` (which ``first``/``take``/``head`` funnel
-into), ``count``, and ``localCheckpoint(eager=True)``.  The counts are
-exact and deterministic -- they depend only on the operator's control
-flow, never on Spark's physical planning.
+The counter is ``conftest.DriverActions``.
 """
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-class _ActionCounter:
-    """Counts driver-side actions issued while active."""
-
-    def __init__(self, monkeypatch):
-        # Spark 4: pyspark.sql.dataframe.DataFrame is a dispatch facade;
-        # concrete (non-Connect) frames are classic.dataframe.DataFrame,
-        # so the patch must land on the classic class.
-        try:
-            import pyspark.sql.classic.dataframe as dfmod
-        except ImportError:  # Spark 3.x
-            import pyspark.sql.dataframe as dfmod
-
-        self.n = 0
-        DF = dfmod.DataFrame
-        counter = self
-
-        orig_collect = DF.collect
-        orig_count = DF.count
-        orig_ckpt = DF.localCheckpoint
-
-        def collect(df, *a, **k):
-            counter.n += 1
-            return orig_collect(df, *a, **k)
-
-        def count(df, *a, **k):
-            counter.n += 1
-            return orig_count(df, *a, **k)
-
-        def ckpt(df, eager=True):
-            if eager:
-                counter.n += 1
-            return orig_ckpt(df, eager=eager)
-
-        monkeypatch.setattr(DF, "collect", collect)
-        monkeypatch.setattr(DF, "count", count)
-        monkeypatch.setattr(DF, "localCheckpoint", ckpt)
 
 
 @pytest.fixture(scope="module")
@@ -88,12 +44,12 @@ def _released(spark):
     release_caches()
 
 
-def test_pagerank_actions(spark, chain_edges, monkeypatch):
+def test_pagerank_actions(spark, chain_edges, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         pagerank_fixedpoint,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     pagerank_fixedpoint(chain_edges, iterations=5)
     _released(spark)
     # 3 = combined probe/stats collect + the cadence checkpoint at round
@@ -104,12 +60,12 @@ def test_pagerank_actions(spark, chain_edges, monkeypatch):
     assert c.n == 3, f"pagerank issued {c.n} actions; per-round actions are back"
 
 
-def test_bfs_actions(spark, chain_edges, seeds, monkeypatch):
+def test_bfs_actions(spark, chain_edges, seeds, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         bfs_distances,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     bfs_distances(chain_edges, seeds, max_depth=4).collect()
     _released(spark)
     # 3 = convergence checks at rounds 2 and 4 + the caller's collect.
@@ -117,12 +73,12 @@ def test_bfs_actions(spark, chain_edges, seeds, monkeypatch):
     assert c.n == 3, f"bfs issued {c.n} actions; per-round checks are back"
 
 
-def test_sssp_actions(spark, chain_edges, seeds, monkeypatch):
+def test_sssp_actions(spark, chain_edges, seeds, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         shortest_paths_bounded,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     shortest_paths_bounded(
         chain_edges.withColumn("w", F.lit(2)), seeds, rounds=4
     ).collect()
@@ -131,12 +87,12 @@ def test_sssp_actions(spark, chain_edges, seeds, monkeypatch):
     assert c.n == 3, f"sssp issued {c.n} actions; per-round checks are back"
 
 
-def test_kcore_actions(spark, chain_edges, monkeypatch):
+def test_kcore_actions(spark, chain_edges, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         kcore_bounded,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     kcore_bounded(chain_edges, k=2, rounds=4).collect()
     _released(spark)
     # 5 = one survivor count per round (check_every=1 -- a peel round
@@ -148,12 +104,12 @@ def test_kcore_actions(spark, chain_edges, monkeypatch):
     assert c.n == 5, f"kcore issued {c.n} actions; the baseline count is back"
 
 
-def test_temporal_actions(spark, chain_edges, seeds, monkeypatch):
+def test_temporal_actions(spark, chain_edges, seeds, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         temporal_reachability,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     temporal_reachability(
         chain_edges.select(
             "src",
@@ -171,12 +127,12 @@ def test_temporal_actions(spark, chain_edges, seeds, monkeypatch):
     assert c.n == 1, f"temporal issued {c.n} actions; per-round checkpoints are back"
 
 
-def test_hits_actions(spark, chain_edges, monkeypatch):
+def test_hits_actions(spark, chain_edges, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         hits_fixedpoint,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     hits_fixedpoint(chain_edges, iterations=3)
     _released(spark)
     # 6 = one max collect per half-step (the L-inf normalization IS the
@@ -209,12 +165,12 @@ def corpus(spark):
     return spark.createDataFrame(rows, "text string")
 
 
-def test_connected_components_actions(spark, chain_pairs, monkeypatch):
+def test_connected_components_actions(spark, chain_pairs, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.dedup import (
         connected_components,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     connected_components(chain_pairs).collect()
     _released(spark)
     # 5 = one convergence agg per round (4 rounds: the third changes the
@@ -222,7 +178,7 @@ def test_connected_components_actions(spark, chain_pairs, monkeypatch):
     assert c.n == 5, f"connected_components issued {c.n} actions"
 
 
-def test_hierarchy_actions(spark, monkeypatch):
+def test_hierarchy_actions(spark, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.graph import (
         hierarchy_flatten,
     )
@@ -230,7 +186,7 @@ def test_hierarchy_actions(spark, monkeypatch):
     nodes = spark.createDataFrame(
         [(i, i // 2 if i > 1 else None) for i in range(1, 16)], "node long, parent long"
     )
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     hierarchy_flatten(nodes).collect()
     _released(spark)
     # 6 = the eager seed checkpoint + one moved-count per doubling round
@@ -238,12 +194,12 @@ def test_hierarchy_actions(spark, monkeypatch):
     assert c.n == 6, f"hierarchy_flatten issued {c.n} actions"
 
 
-def test_kcenter_greedy_actions(spark, vectors, monkeypatch):
+def test_kcenter_greedy_actions(spark, vectors, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.clustering import (
         kcenter_greedy_fixedpoint,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     kcenter_greedy_fixedpoint(vectors, k=4, dim=4, scale=100)
     _released(spark)
     # 4 = the seed-row collect + one farthest-point collect per added
@@ -251,12 +207,12 @@ def test_kcenter_greedy_actions(spark, vectors, monkeypatch):
     assert c.n == 4, f"kcenter_greedy_fixedpoint issued {c.n} actions"
 
 
-def test_kcenter_batched_actions(spark, vectors, monkeypatch):
+def test_kcenter_batched_actions(spark, vectors, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.clustering import (
         kcenter_batched_fixedpoint,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     kcenter_batched_fixedpoint(vectors, k=5, dim=4, scale=100, batch=2)
     _released(spark)
     # 4 = the seed-row collect + one candidate collect per pass (3 passes
@@ -264,14 +220,15 @@ def test_kcenter_batched_actions(spark, vectors, monkeypatch):
     assert c.n == 4, f"kcenter_batched_fixedpoint issued {c.n} actions"
 
 
-def test_power_iteration_actions(spark, vectors, monkeypatch):
+def test_power_iteration_actions(spark, vectors, driver_actions):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.similarity import (
         gram_fixedpoint,
         power_iteration_topvec,
     )
 
     cells = gram_fixedpoint(vectors, scale=100, dim=4)
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
+    c.reset()  # count the operator's actions only, not gram_fixedpoint's
     power_iteration_topvec(cells, iterations=3).collect()
     _released(spark)
     # 4 = one eager checkpoint per iteration + the caller's collect.
@@ -279,12 +236,12 @@ def test_power_iteration_actions(spark, vectors, monkeypatch):
 
 
 @pytest.mark.parametrize("return_symbols", [False, True])
-def test_bpe_learned_merges_actions(spark, corpus, monkeypatch, return_symbols):
+def test_bpe_learned_merges_actions(spark, corpus, driver_actions, return_symbols):
     from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators.trainprep import (
         bpe_learn_merges,
     )
 
-    c = _ActionCounter(monkeypatch)
+    c = driver_actions
     bpe_learn_merges(corpus, "text", rounds=3, return_symbols=return_symbols)
     _released(spark)
     # 4 = one top-pair collect per round + the count that materializes the

@@ -3,9 +3,9 @@
 Each of the twelve iterative operators runs its rounds on one
 ``CheckpointChain``.  These tests pin what that buys:
 
-- a successful call followed by ``release_caches()`` returns the
-  persistent-RDD count to its pre-call value (the final frame is pinned
-  under the operator's key, never left unregistered);
+- a successful call followed by ``release_caches()`` leaves no new
+  persisted RDD (the final frame is pinned under the operator's key,
+  never left unregistered);
 - a driver action that fails at ANY point of an operator call leaves no
   persisted RDD behind once ``release_caches()`` has run -- the chain
   released every frame it held on the way out;
@@ -30,52 +30,6 @@ from modern_data_lakehouse_pipeline_for_logistics_analytics__spark.operators imp
 )
 
 PKG = pathlib.Path(clustering.__file__).resolve().parents[1]
-
-
-class _Injected(RuntimeError):
-    pass
-
-
-class _Actions:
-    """Counts the driver actions the operators issue (``collect``, which
-    ``first`` funnels into, ``count`` and eager ``localCheckpoint``), and
-    once armed raises in place of the ``fail_at``-th one."""
-
-    def __init__(self, monkeypatch):
-        try:
-            import pyspark.sql.classic.dataframe as dfmod
-        except ImportError:  # Spark 3.x
-            import pyspark.sql.dataframe as dfmod
-
-        DF = dfmod.DataFrame
-        self.n = 0
-        self.fail_at = None
-        orig_collect, orig_count, orig_ckpt = DF.collect, DF.count, DF.localCheckpoint
-
-        def action():
-            self.n += 1
-            if self.n == self.fail_at:
-                raise _Injected(f"injected failure of action {self.n}")
-
-        def collect(df, *a, **k):
-            action()
-            return orig_collect(df, *a, **k)
-
-        def count(df, *a, **k):
-            action()
-            return orig_count(df, *a, **k)
-
-        def ckpt(df, eager=True):
-            if eager:
-                action()
-            return orig_ckpt(df, eager=eager)
-
-        monkeypatch.setattr(DF, "collect", collect)
-        monkeypatch.setattr(DF, "count", count)
-        monkeypatch.setattr(DF, "localCheckpoint", ckpt)
-
-    def arm(self, fail_at):
-        self.n, self.fail_at = 0, fail_at
 
 
 def _chain_edges(spark):
@@ -174,32 +128,35 @@ LOOPS = {
 }
 
 
-def _persistent(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+def _persistent(spark) -> set[int]:
+    # Ids, not a count: the ContextCleaner may free an earlier test's
+    # unreachable RDD mid-test, which must not offset a new one.
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 @pytest.mark.parametrize("name", sorted(LOOPS))
-def test_loop_releases_every_frame(spark, name, monkeypatch):
+def test_loop_releases_every_frame(spark, name, driver_actions):
     """A successful call, then the same call failing at each of its driver
     actions in turn (the first, every one inside the loop, and the reads
-    of the result); after each, ``release_caches()`` must bring the
-    persistent-RDD count back to where it was."""
+    of the result); after each, ``release_caches()`` must leave no
+    persisted RDD that was not persisted before the call."""
     spark.catalog.clearCache()  # earlier tests' cached frames stay out of the count
     dedup.release_caches()
     before = _persistent(spark)
-    actions = _Actions(monkeypatch)
+    driver_actions.reset()
     LOOPS[name](spark)
     dedup.release_caches()
-    assert _persistent(spark) == before, f"{name} left a frame release_caches() cannot free"
-    total = actions.n
+    left = _persistent(spark) - before
+    assert not left, f"{name} left {len(left)} RDDs release_caches() cannot free"
+    total = driver_actions.n
     assert total >= 2, f"{name}: the fixture must run more than one action"
     for fail_at in range(1, total + 1):
-        actions.arm(fail_at)
-        with pytest.raises(_Injected):
+        driver_actions.reset(fail_at)
+        with pytest.raises(RuntimeError, match="injected failure"):
             LOOPS[name](spark)
         dedup.release_caches()
         leaked = _persistent(spark) - before
-        assert leaked == 0, f"{name}: failing action {fail_at}/{total} leaked {leaked} RDDs"
+        assert not leaked, f"{name}: failing action {fail_at}/{total} leaked {len(leaked)} RDDs"
 
 
 # Calls that create or release checkpoint frames outside loop.py, by
